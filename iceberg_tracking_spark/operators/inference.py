@@ -5,11 +5,12 @@ exploded — a flatMap expressed declaratively, so Catalyst can pipeline
 it with the scan and push filters below it. Coordinate translate back
 to original space (X14) is plain arithmetic.
 
-M1 (inference) is the mapInPandas scaffold: per-partition model load
-(once), Arrow-batched forward passes. The model here is a deterministic
-stub (the torch stack is not in this container); the partitioning,
-batching, and schema mechanics are the real thing — swap `_load_model`
-for a torch/ONNX load on a GPU cluster.
+M1 (inference) runs through operators/boundary.map_rows: the model is
+built once and shipped once per task, forward passes run over Arrow
+batches. The model here is a deterministic stub (the torch stack is not
+in this container); the partitioning, batching, and schema mechanics
+are the real thing — swap `_StubDetector` for a torch/ONNX load on a
+GPU cluster.
 """
 
 from __future__ import annotations
@@ -21,6 +22,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .boundary import map_rows
 
 
 def tile_plan(
@@ -92,7 +95,8 @@ class _StubDetector:
     """Deterministic fake detector: hash-derived boxes per tile.
 
     Placeholder for a torch Faster R-CNN load+forward
-    (reference detection.py:1376-1380); loaded once per partition.
+    (reference detection.py:1376-1380). Stateless md5 arithmetic, so
+    one instance serves every partition.
     """
 
     def predict(self, media_id: int, scale: float, tx: int, ty: int):
@@ -114,35 +118,20 @@ class _StubDetector:
 
 
 def detect_tiles(tiles: DataFrame) -> DataFrame:
-    """M1: per-tile batch inference via mapInPandas with per-partition
-    model load. Output: tile-local detections (one row per box)."""
+    """M1: per-tile batch inference via map_rows. Output: tile-local
+    detections (one row per box)."""
+    model = _StubDetector()
 
-    def _infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = _StubDetector()  # per-partition load — once, not per row
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                for (bl, bt, bw, bh, conf) in model.predict(
-                    r.media_id, r.scale, r.tile_x, r.tile_y
-                ):
-                    rows.append(
-                        (r.media_id, r.scale, r.tile_x, r.tile_y, bl, bt, bw, bh, conf)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "scale", "tile_x", "tile_y",
-                    "bb_left", "bb_top", "bb_width", "bb_height", "conf",
-                ],
-            )
+    def _infer(r):
+        for box in model.predict(r.media_id, r.scale, r.tile_x, r.tile_y):
+            yield (r.media_id, r.scale, r.tile_x, r.tile_y, *box)
 
-    return tiles.mapInPandas(
+    return map_rows(
+        tiles,
+        "media_id long, scale double, tile_x int, tile_y int, "
+        "bb_left double, bb_top double, bb_width double, bb_height double, "
+        "conf double",
         _infer,
-        schema=(
-            "media_id long, scale double, tile_x int, tile_y int, "
-            "bb_left double, bb_top double, bb_width double, bb_height double, "
-            "conf double"
-        ),
     )
 
 

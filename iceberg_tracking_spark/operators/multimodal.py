@@ -2,10 +2,12 @@
 
 Media (image/audio/video) is carried as an opaque `binary` column with
 typed metadata (schemas.MEDIA_SCHEMA). Decode / feature-extract /
-resize / frame-sample run as Arrow-batched `mapInPandas` functions so
-each partition amortizes decoder initialization — the distributed form
-of the reference's per-worker model/DataLoader setup
-(embedding.py:1358-1362).
+resize / frame-sample run as per-row Python through
+operators/boundary.map_rows (one Arrow-batched mapInPandas); anything a
+stage loads is built once and shipped once per task — the distributed
+form of the reference's per-worker model/DataLoader setup
+(embedding.py:1358-1362). The header scans are pure Catalyst: one scan
+shape (`_media_scan`) plus one unsigned-byte reader (`_uint`).
 
 Decode is REAL for PGM, PNG and baseline JPEG blobs — the pure-numpy
 codecs in operators/imagecodec.py (PGM; PNG via stdlib-zlib inflate +
@@ -25,12 +27,13 @@ from __future__ import annotations
 
 import hashlib
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.binary import media_id_from_path, read_binary_files
+from .boundary import map_rows
 
 
 def synthesize_media_table(
@@ -61,18 +64,13 @@ def media_from_binary_files(
     the engine's media columns. Width/height are derived metadata here
     (a real pipeline would read them from the container header); the
     blob bytes are the genuine file contents."""
-    from ..sources.binary import ensure_binary_fixture, read_binary_files
+    from ..sources.binary import ensure_binary_fixture
 
     raw = read_binary_files(spark, path or ensure_binary_fixture())
     # Numeric basename → id; anything else falls back to a stable hash
     # of the path (a NULL id would poison the derived width/height and
     # crash the downstream mapInPandas decode on int(None)).
-    media_id = F.coalesce(
-        F.element_at(
-            F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-        ).cast("long"),
-        F.abs(F.xxhash64(F.col("path"))),
-    )
+    media_id = F.coalesce(media_id_from_path(), F.abs(F.xxhash64(F.col("path"))))
     return raw.select(
         media_id.alias("media_id"),
         F.lit(modality).alias("modality"),
@@ -155,33 +153,77 @@ def decode_media(
     return _fake_decode(content, width, height)
 
 
+def _media_scan(
+    spark: SparkSession,
+    path: str,
+    glob: str,
+    mime: str,
+    *fields: Column,
+    modality: str = "image",
+) -> DataFrame:
+    """The shape every header scan shares: a binaryFile scan of `path`
+    as (media_id, modality, content, mime_type, *fields), where
+    `fields` are the format's metadata columns parsed from the header
+    bytes in Catalyst — no Python, so the scan rides whole-stage
+    codegen and the executors' decoders re-read the same header from
+    the same bytes."""
+    return read_binary_files(spark, path, glob=glob).select(
+        media_id_from_path().alias("media_id"),
+        F.lit(modality).alias("modality"),
+        F.col("content"),
+        F.lit(mime).alias("mime_type"),
+        *fields,
+    )
+
+
+def _uint(off: int, n: int = 1, big_endian: bool = False) -> Column:
+    """Unsigned `n`-byte integer (long) at 0-based byte `off` of
+    `content`, read byte by byte through its hex form; NULL when the
+    blob is shorter than `off + n` bytes."""
+    val = F.lit(0).cast("long")
+    for k in range(n) if big_endian else range(n - 1, -1, -1):
+        byte = F.conv(F.hex(F.substring(F.col("content"), off + k + 1, 1)), 16, 10)
+        val = val * 256 + byte.cast("long")
+    return val
+
+
+def _magic(off: int, sig: bytes) -> Column:
+    """`content` carries the bytes `sig` at 0-based byte `off`."""
+    return F.substring(F.col("content"), off + 1, len(sig)) == F.lit(sig)
+
+
+def _ascii_int(pattern: str) -> Column:
+    """The ASCII decimal field captured by `pattern` from the hex form
+    of the first 48 bytes ('3X' = digit X). The header bleeds into
+    binary pixel data, which a strict UTF-8 decode rejects (Spark 4
+    decode() is strict), so text headers are matched in hex."""
+    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 48)))
+    digits = F.regexp_extract(hx, pattern, 1)
+    return F.regexp_replace(digits, "3(.)", "$1").cast("int")
+
+
+def _still(width: Column, height: Column) -> list[Column]:
+    """Metadata columns of a still-image scan: header dims, no duration."""
+    return [
+        width.cast("int").alias("width"),
+        height.cast("int").alias("height"),
+        F.lit(None).cast("long").alias("duration_ms"),
+    ]
+
+
 def media_from_image_files(spark: SparkSession, path: str | None = None) -> DataFrame:
     """REAL image scan: binaryFile over the PGM fixture with width and
     height parsed from the ACTUAL image headers — in pure Catalyst
-    (`decode` + `regexp_extract` on the ASCII prefix), no Python. The
-    downstream decode then re-reads the same dims from the same bytes
-    on the executors."""
-    from ..sources.binary import ensure_image_fixture, read_binary_files
+    (`regexp_extract` on the hex of the ASCII prefix: '50350a' =
+    'P5' + LF, '20' = space), no Python."""
+    from ..sources.binary import ensure_image_fixture
 
-    raw = read_binary_files(spark, path or ensure_image_fixture(), glob="*.pgm")
-    # The 20-byte prefix covers the header but bleeds into binary pixel
-    # data, which a strict UTF-8 decode rejects (Spark 4 decode() is
-    # strict) — so parse the ASCII header out of the HEX encoding
-    # instead: '50350a' = "P5\n", '3X' = digit X, '20' = space.
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 20)))
-    width_hex = F.regexp_extract(hx, r"^50350a((?:3[0-9])+)20", 1)
-    height_hex = F.regexp_extract(hx, r"^50350a(?:3[0-9])+20((?:3[0-9])+)0a", 1)
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("image").alias("modality"),
-        F.col("content"),
-        F.lit("image/x-portable-graymap").alias("mime_type"),
-        F.regexp_replace(width_hex, "3(.)", "$1").cast("int").alias("width"),
-        F.regexp_replace(height_hex, "3(.)", "$1").cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
+    return _media_scan(
+        spark, path or ensure_image_fixture(), "*.pgm", "image/x-portable-graymap",
+        *_still(
+            _ascii_int(r"^50350a((?:3[0-9])+)20"),
+            _ascii_int(r"^50350a(?:3[0-9])+20((?:3[0-9])+)0a"),
+        ),
     )
 
 
@@ -189,22 +231,12 @@ def media_from_png_files(spark: SparkSession, path: str | None = None) -> DataFr
     """REAL compressed-image scan: binaryFile over the PNG fixture with
     width/height parsed from the ACTUAL IHDR chunk in pure Catalyst —
     the PNG header is fixed-layout (big-endian u32 at byte offsets
-    16/20), so `conv(hex-slice, 16, 10)` reads it with no Python."""
-    from ..sources.binary import ensure_png_fixture, read_binary_files
+    16/20), so `_uint` reads it with no Python."""
+    from ..sources.binary import ensure_png_fixture
 
-    raw = read_binary_files(spark, path or ensure_png_fixture(), glob="*.png")
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 24)))
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("image").alias("modality"),
-        F.col("content"),
-        F.lit("image/png").alias("mime_type"),
-        F.conv(F.substring(hx, 33, 8), 16, 10).cast("int").alias("width"),
-        F.conv(F.substring(hx, 41, 8), 16, 10).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
+    return _media_scan(
+        spark, path or ensure_png_fixture(), "*.png", "image/png",
+        *_still(_uint(16, 4, big_endian=True), _uint(20, 4, big_endian=True)),
     )
 
 
@@ -214,34 +246,16 @@ def media_from_gif_files(spark: SparkSession, path: str | None = None) -> DataFr
     Catalyst — u16 little-endian at byte offsets 6/8, read from the
     hex encoding (the reference's loader sniffs and reads GIFs,
     helpers.py:665-685 / embedding.py:234-250)."""
-    from ..sources.binary import ensure_gif_fixture, read_binary_files
+    from ..sources.binary import ensure_gif_fixture
 
-    raw = read_binary_files(spark, path or ensure_gif_fixture(), glob="*.gif")
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 10)))
-
-    def _le16(off: int):  # 0-based byte offset → little-endian u16
-        lo = F.conv(F.substring(hx, 2 * off + 1, 2), 16, 10).cast("int")
-        hi = F.conv(F.substring(hx, 2 * off + 3, 2), 16, 10).cast("int")
-        return lo + hi * 256
-
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("image").alias("modality"),
-        F.col("content"),
-        F.lit("image/gif").alias("mime_type"),
-        _le16(6).alias("width"),
-        _le16(8).alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
+    return _media_scan(
+        spark, path or ensure_gif_fixture(), "*.gif", "image/gif",
+        *_still(_uint(6, 2), _uint(8, 2)),
     )
 
 
-def extract_media_features(
-    media: DataFrame, decode_stub: bool = True, batch_note: str = "decode"
-) -> DataFrame:
-    """Decode + feature-extract per blob via mapInPandas.
+def extract_media_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
+    """Decode + feature-extract per blob via map_rows.
 
     Output: (media_id, n_bytes, mean_intensity, std_intensity,
     phash) — mean/std over the decoded matrix, phash = md5 of the
@@ -249,52 +263,30 @@ def extract_media_features(
     perceptual-hash stand-in; ASCII rather than raw bytes so the SQL
     oracle can rebuild the exact digest input with string_agg).
     """
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Per-partition decoder init would go here (load codec/model once).
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height), decode_stub
-                )
-                small = mat[::8, ::8]
-                bits = (small > small.mean()).astype(np.uint8).ravel()
-                phash = hashlib.md5(
-                    "".join(map(str, bits)).encode()
-                ).hexdigest()
-                # mean/std via EXACT integer moments then the closed
-                # form sqrt(SS/N - (S/N)^2) — the same float-op
-                # sequence the SQL oracle uses (sum-of-ints * 1.0 / N).
-                # numpy's two-pass mat.std() differs by up to ~1e-13,
-                # enough to flip round(.,6) on a grid boundary.
-                m64 = mat.astype(np.int64)
-                n_px = int(m64.size)
-                s = int(m64.sum())
-                ss = int((m64 * m64).sum())
-                mean = s / n_px
-                std = math.sqrt(ss / n_px - mean * mean)
-                rows.append(
-                    (
-                        r.media_id,
-                        len(bytes(r.content)),
-                        mean,
-                        std,
-                        phash,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_bytes", "mean_intensity", "std_intensity", "phash",
-                ],
-            )
+    def _features(r):
+        content = bytes(r.content)
+        mat = decode_media(content, int(r.width), int(r.height), decode_stub)
+        small = mat[::8, ::8]
+        bits = (small > small.mean()).astype(np.uint8).ravel()
+        phash = hashlib.md5("".join(map(str, bits)).encode()).hexdigest()
+        # mean/std via EXACT integer moments then the closed
+        # form sqrt(SS/N - (S/N)^2) — the same float-op
+        # sequence the SQL oracle uses (sum-of-ints * 1.0 / N).
+        # numpy's two-pass mat.std() differs by up to ~1e-13,
+        # enough to flip round(.,6) on a grid boundary.
+        m64 = mat.astype(np.int64)
+        n_px = int(m64.size)
+        s = int(m64.sum())
+        ss = int((m64 * m64).sum())
+        mean = s / n_px
+        std = math.sqrt(ss / n_px - mean * mean)
+        yield (r.media_id, len(content), mean, std, phash)
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, n_bytes long, mean_intensity double, "
+        "std_intensity double, phash string",
         _features,
-        schema=(
-            "media_id long, n_bytes long, mean_intensity double, "
-            "std_intensity double, phash string"
-        ),
     )
 
 
@@ -330,68 +322,38 @@ def media_from_webp_files(spark: SparkSession, path: str | None = None) -> DataF
     (tests/test_mediacatalog.py::test_webp_scan_parity_with_catalog):
     on every blob the scan accepts, its dims must equal the general
     parser's."""
-    from ..sources.binary import ensure_webp_fixture, read_binary_files
+    from ..sources.binary import ensure_webp_fixture
 
-    raw = read_binary_files(spark, path or ensure_webp_fixture(), glob="*.webp")
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 25)))
-    # bytes 12-15 == 'VP8L' (hex 5650384c): hex chars 25..32
-    raw = raw.where(F.substring(hx, 25, 8) == F.lit("5650384c"))
-
-    def _u8(off: int):  # 0-based byte offset
-        return F.conv(F.substring(hx, 2 * off + 1, 2), 16, 10).cast("int")
-
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("image").alias("modality"),
-        F.col("content"),
-        F.lit("image/webp").alias("mime_type"),
-        (
-            F.lit(1) + _u8(21) + (_u8(22) % 64) * 256
-        ).alias("width"),
-        (
-            F.lit(1) + F.floor(_u8(22) / 64).cast("int")
-            + _u8(23) * 4 + (_u8(24) % 16) * 1024
-        ).cast("int").alias("height"),
-        F.lit(None).cast("long").alias("duration_ms"),
-    )
+    # w−1 and h−1 are bits 0-13 and 14-27 of the little-endian u32 at 21
+    bits = _uint(21, 4)
+    return _media_scan(
+        spark, path or ensure_webp_fixture(), "*.webp", "image/webp",
+        *_still(
+            bits.bitwiseAND(0x3FFF) + 1,
+            F.shiftright(bits, 14).bitwiseAND(0x3FFF) + 1,
+        ),
+    ).where(_magic(12, b"VP8L"))
 
 
 def extract_pixel_stats(media: DataFrame) -> DataFrame:
     """(media_id, px_sum, max_intensity, mean_intensity) via REAL
-    decode (PGM/PNG) in Arrow-batched mapInPandas — the stats the
+    decode (PGM/PNG) through map_rows — the stats the
     q_png_decode oracle re-derives pixel-by-pixel from the raw bytes.
     px_sum is the exact integer moment; mean is its ONE division (the
     house exactness style), rounded at the query layer."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height),
-                    decode_stub=False,
-                )
-                m64 = mat.astype(np.int64)
-                s = int(m64.sum())
-                rows.append(
-                    (r.media_id, s, int(m64.max()), s / m64.size)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "px_sum", "max_intensity", "mean_intensity",
-                ],
-            )
+    def _stats(r):
+        mat = decode_media(
+            bytes(r.content), int(r.width), int(r.height), decode_stub=False
+        )
+        m64 = mat.astype(np.int64)
+        s = int(m64.sum())
+        yield (r.media_id, s, int(m64.max()), s / m64.size)
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, px_sum long, max_intensity long, mean_intensity double",
         _stats,
-        schema=(
-            "media_id long, px_sum long, max_intensity long, "
-            "mean_intensity double"
-        ),
     )
 
 
@@ -414,7 +376,7 @@ def decode_resize_pad(
     decode_stub: bool = True,
 ) -> DataFrame:
     """M3 for real: decode → bilinear-resize to (out_h, out_w) → uint8,
-    per blob, via Arrow-batched mapInPandas (the reference's
+    per blob, via map_rows (the reference's
     crop/resize/pad to the backbone input, embedding.py:280-310).
 
     Output: (media_id, out_mean, out_std, thumb) where `thumb` is the
@@ -424,29 +386,20 @@ def decode_resize_pad(
     formats follow the decode_stub contract of decode_media."""
     from .imagecodec import resize_bilinear
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(
-                    bytes(r.content), int(r.width), int(r.height), decode_stub
-                )
-                out = np.rint(resize_bilinear(mat, out_h, out_w)).astype(np.uint8)
-                rows.append(
-                    (
-                        r.media_id,
-                        float(out.mean()),
-                        float(out.std()),
-                        [int(v) for v in out[:8, :8].ravel()],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "out_mean", "out_std", "thumb"]
-            )
+    def _resize(r):
+        mat = decode_media(bytes(r.content), int(r.width), int(r.height), decode_stub)
+        out = np.rint(resize_bilinear(mat, out_h, out_w)).astype(np.uint8)
+        yield (
+            r.media_id,
+            float(out.mean()),
+            float(out.std()),
+            [int(v) for v in out[:8, :8].ravel()],
+        )
 
-    return media.select("media_id", "content", "width", "height").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content", "width", "height"),
+        "media_id long, out_mean double, out_std double, thumb array<int>",
         _resize,
-        schema="media_id long, out_mean double, out_std double, thumb array<int>",
     )
 
 
@@ -464,78 +417,42 @@ def media_from_audio_files(spark: SparkSession, path: str | None = None) -> Data
     n_samples/duration. Guard: the layout is VALIDATED in the parse
     ('fmt ' at 12, 'data' at 36) and the metadata fields are NULLed
     for any file that doesn't match, rather than being wrong."""
-    from ..sources.binary import ensure_audio_fixture, read_binary_files
+    from ..sources.binary import ensure_audio_fixture
 
-    raw = read_binary_files(spark, path or ensure_audio_fixture(), glob="*.wav")
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 48)))
-
-    def _le32(start_byte: int):  # 0-based byte offset → little-endian u32
-        val = F.lit(0)
-        for k in range(3, -1, -1):
-            b = F.conv(
-                F.substring(hx, 2 * (start_byte + k) + 1, 2), 16, 10
-            ).cast("long")
-            val = val * 256 + b
-        return val
-
-    canonical = (
-        # "fmt " at byte 12 and "data" at byte 36 — hex '666d7420' /
-        # '64617461' (1-based hex positions 2*off+1).
-        (F.substring(hx, 2 * 12 + 1, 8) == "666d7420")
-        & (F.substring(hx, 2 * 36 + 1, 8) == "64617461")
-    )
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    n_samples = F.when(canonical, (_le32(40) / 2).cast("long"))
-    rate = F.when(canonical, _le32(24))
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("audio").alias("modality"),
-        F.col("content"),
-        F.lit("audio/wav").alias("mime_type"),
+    canonical = _magic(12, b"fmt ") & _magic(36, b"data")
+    n_samples = F.when(canonical, (_uint(40, 4) / 2).cast("long"))
+    rate = F.when(canonical, _uint(24, 4))
+    return _media_scan(
+        spark, path or ensure_audio_fixture(), "*.wav", "audio/wav",
         rate.cast("int").alias("sample_rate"),
         n_samples.alias("n_samples"),
         (n_samples * 1000 / rate).cast("long").alias("duration_ms"),
+        modality="audio",
     )
 
 
 def extract_audio_features(media: DataFrame) -> DataFrame:
-    """REAL audio decode + signal features per WAV blob via Arrow-batched
-    mapInPandas: RMS, peak, zero-crossing rate (the cheap VAD/quality
-    signals a 100 TB audio corpus is triaged by). Same partition-
-    amortized decoder pattern as the image path."""
+    """REAL audio decode + signal features per WAV blob via map_rows:
+    RMS, peak, zero-crossing rate (the cheap VAD/quality signals a
+    100 TB audio corpus is triaged by)."""
     from .audiocodec import audio_features, decode_wav
 
-    def _features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                samples, rate = decode_wav(bytes(r.content))
-                f = audio_features(samples, rate)
-                rows.append(
-                    (
-                        r.media_id,
-                        int(f["n_samples"]),
-                        float(f["duration_ms"]),
-                        float(f["rms"]),
-                        float(f["peak"]),
-                        float(f["zcr"]),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "n_samples", "duration_ms", "rms", "peak", "zcr",
-                ],
-            )
+    def _features(r):
+        f = audio_features(*decode_wav(bytes(r.content)))
+        yield (
+            r.media_id,
+            int(f["n_samples"]),
+            float(f["duration_ms"]),
+            float(f["rms"]),
+            float(f["peak"]),
+            float(f["zcr"]),
+        )
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, n_samples long, duration_ms double, "
+        "rms double, peak double, zcr double",
         _features,
-        schema=(
-            "media_id long, n_samples long, duration_ms double, "
-            "rms double, peak double, zcr double"
-        ),
     )
 
 
@@ -543,76 +460,52 @@ def media_from_video_files(spark: SparkSession, path: str | None = None) -> Data
     """REAL video scan: binaryFile over the Y4M fixture, with width /
     height parsed from the ACTUAL stream headers in pure Catalyst (hex
     regexp on the ASCII prefix — same technique as the PGM scan)."""
-    from ..sources.binary import ensure_video_fixture, read_binary_files
+    from ..sources.binary import ensure_video_fixture
 
-    raw = read_binary_files(spark, path or ensure_video_fixture(), glob="*.y4m")
-    hx = F.lower(F.hex(F.substring(F.col("content"), 1, 48)))
-    # "YUV4MPEG2 W" = 595556344d50454732 20 57; digits are 3X; " H" = 20 48
-    w_hex = F.regexp_extract(hx, r"^595556344d504547322057((?:3[0-9])+)20", 1)
-    h_hex = F.regexp_extract(
-        hx, r"^595556344d504547322057(?:3[0-9])+2048((?:3[0-9])+)20", 1
-    )
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    width = F.regexp_replace(w_hex, "3(.)", "$1").cast("int")
-    height = F.regexp_replace(h_hex, "3(.)", "$1").cast("int")
-    return raw.select(
-        media_id.alias("media_id"),
-        F.lit("video").alias("modality"),
-        F.col("content"),
-        F.lit("video/x-yuv4mpeg").alias("mime_type"),
-        width.alias("width"),
-        height.alias("height"),
+    # "YUV4MPEG2 W" = 595556344d50454732 20 57; " H" = 20 48
+    return _media_scan(
+        spark, path or ensure_video_fixture(), "*.y4m", "video/x-yuv4mpeg",
+        _ascii_int(r"^595556344d504547322057((?:3[0-9])+)20").alias("width"),
+        _ascii_int(
+            r"^595556344d504547322057(?:3[0-9])+2048((?:3[0-9])+)20"
+        ).alias("height"),
         F.col("length").alias("n_bytes"),
+        modality="video",
     )
 
 
 def extract_video_frames(media: DataFrame) -> DataFrame:
-    """REAL video frame extraction via mapInPandas: decode the Y4M
+    """REAL video frame extraction via map_rows: decode the Y4M
     stream, emit one row per frame with luma statistics — the decode
     stage behind the sample_video_frames planner (M-surface), running
     on actual frames instead of a stub. Per-file splits keep it
     embarrassingly parallel; a 100 TB corpus adds files, not state."""
     from .audiocodec import decode_y4m
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, fps = decode_y4m(bytes(r.content))
-                for idx in range(frames.shape[0]):
-                    f = frames[idx].astype(np.float64)
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(frames.shape[2]),
-                            int(frames.shape[1]),
-                            int(fps),
-                            float(f.mean()),
-                            float(f.std()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "fps",
-                    "frame_mean", "frame_std",
-                ],
+    def _frames(r):
+        frames, fps = decode_y4m(bytes(r.content))
+        for idx in range(frames.shape[0]):
+            f = frames[idx].astype(np.float64)
+            yield (
+                r.media_id,
+                idx,
+                int(frames.shape[2]),
+                int(frames.shape[1]),
+                int(fps),
+                float(f.mean()),
+                float(f.std()),
             )
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, fps int, "
+        "frame_mean double, frame_std double",
         _frames,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, fps int, "
-            "frame_mean double, frame_std double"
-        ),
     )
 
 
 def extract_video_motion(media: DataFrame) -> DataFrame:
-    """Consecutive-frame motion energy via mapInPandas: decode the Y4M
+    """Consecutive-frame motion energy via map_rows: decode the Y4M
     stream once per clip and emit, for every frame f ≥ 1, the EXACT
     integer sum of absolute luma differences vs frame f−1 — the shot-
     boundary / motion-detection primitive (a cut is a motion_mean
@@ -622,47 +515,28 @@ def extract_video_motion(media: DataFrame) -> DataFrame:
     extract_video_frames: per-file splits, embarrassingly parallel."""
     from .audiocodec import decode_y4m
 
-    def _motion(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, _fps = decode_y4m(bytes(r.content))
-                # Rolling two-frame buffer: widen only the current pair
-                # to int64 (never the whole clip at 8x raw size), so
-                # peak state really is two frames regardless of clip
-                # length.
-                prev = frames[0].astype(np.int64)
-                for idx in range(1, frames.shape[0]):
-                    cur = frames[idx].astype(np.int64)
-                    d = int(np.abs(cur - prev).sum())
-                    prev = cur
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(frames.shape[2]),
-                            int(frames.shape[1]),
-                            d,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "motion_sum",
-                ],
-            )
+    def _motion(r):
+        frames, _fps = decode_y4m(bytes(r.content))
+        # Rolling two-frame buffer: widen only the current pair
+        # to int64 (never the whole clip at 8x raw size), so
+        # peak state really is two frames regardless of clip
+        # length.
+        prev = frames[0].astype(np.int64)
+        for idx in range(1, frames.shape[0]):
+            cur = frames[idx].astype(np.int64)
+            d = int(np.abs(cur - prev).sum())
+            prev = cur
+            yield (r.media_id, idx, int(frames.shape[2]), int(frames.shape[1]), d)
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, motion_sum long",
         _motion,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, "
-            "motion_sum long"
-        ),
     )
 
 
 def extract_gif_frames(media: DataFrame) -> DataFrame:
-    """REAL animation decode via mapInPandas: run the full multi-frame
+    """REAL animation decode via map_rows: run the full multi-frame
     GIF path (operators/gifcodec.py:decode_gif — GCE delays, disposal,
     frame compositing on the logical screen) and emit one row per
     COMPOSITED frame with its delay and exact grey-pixel moments (the
@@ -676,39 +550,25 @@ def extract_gif_frames(media: DataFrame) -> DataFrame:
     single logical-screen canvas, one int64 frame widened at a time)."""
     from .gifcodec import decode_gif
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                frames, delays = decode_gif(bytes(r.content))
-                for idx in range(frames.shape[0]):
-                    g = frames[idx].astype(np.int64).sum(axis=2) // 3
-                    s = int(g.sum())
-                    rows.append(
-                        (
-                            r.media_id,
-                            int(idx),
-                            int(g.shape[1]),
-                            int(g.shape[0]),
-                            int(delays[idx]),
-                            s,
-                            int(g.max()),
-                            s / g.size,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height", "delay_ms",
-                    "px_sum", "max_intensity", "frame_mean",
-                ],
+    def _frames(r):
+        frames, delays = decode_gif(bytes(r.content))
+        for idx in range(frames.shape[0]):
+            g = frames[idx].astype(np.int64).sum(axis=2) // 3
+            s = int(g.sum())
+            yield (
+                r.media_id,
+                idx,
+                int(g.shape[1]),
+                int(g.shape[0]),
+                int(delays[idx]),
+                s,
+                int(g.max()),
+                s / g.size,
             )
 
-    return media.select("media_id", "content").mapInPandas(
+    return map_rows(
+        media.select("media_id", "content"),
+        "media_id long, frame_idx int, width int, height int, "
+        "delay_ms int, px_sum long, max_intensity long, frame_mean double",
         _frames,
-        schema=(
-            "media_id long, frame_idx int, width int, height int, "
-            "delay_ms int, px_sum long, max_intensity long, "
-            "frame_mean double"
-        ),
     )

@@ -8,6 +8,7 @@ from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
+from ._sqlgen import hex_u8
 from .queries_mot import _DUCK_BOXES, _boxes
 from .registry import query
 
@@ -353,18 +354,12 @@ def _audio_decode_oracle() -> str:
     same files."""
     from ..sources.binary import AUDIO_FIXTURE_DIR
 
-    def pair(off: str) -> str:  # unsigned byte at 0-based offset expr
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
     def le32(start: int) -> str:
         return " + ".join(
-            f"{pair(str(start + k))} * {256 ** k}" for k in range(4)
+            f"{hex_u8(str(start + k))} * {256 ** k}" for k in range(4)
         )
 
-    raw = f"({pair('44 + 2*i')} + 256 * {pair('45 + 2*i')})"
+    raw = f"({hex_u8('44 + 2*i')} + 256 * {hex_u8('45 + 2*i')})"
     sample = f"(CASE WHEN {raw} >= 32768 THEN {raw} - 65536 ELSE {raw} END)"
     return f"""
     WITH b AS (
@@ -457,25 +452,19 @@ def _png_decode_oracle() -> str:
     fixture images are ≤ 13×15 px."""
     from ..sources.binary import PNG_FIXTURE_DIR
 
-    def pair(off: str, col: str = "hx") -> str:  # u8 at 0-based offset
-        return (
-            f"((strpos('0123456789abcdef', substr({col}, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr({col}, 2*({off}) + 2, 1)) - 1))"
-        )
-
     be32 = " + ".join(
-        f"{pair(str(16 + k))} * {256 ** (3 - k)}" for k in range(4)
+        f"{hex_u8(str(16 + k))} * {256 ** (3 - k)}" for k in range(4)
     )
     be32_h = " + ".join(
-        f"{pair(str(20 + k))} * {256 ** (3 - k)}" for k in range(4)
+        f"{hex_u8(str(20 + k))} * {256 ** (3 - k)}" for k in range(4)
     )
-    dep = pair("24")  # IHDR bit depth: byte 8+8+8 = 24
-    ct = pair("25")  # IHDR color type: byte 8+8+9 = 25
+    dep = hex_u8("24")  # IHDR bit depth: byte 8+8+8 = 24
+    ct = hex_u8("25")  # IHDR color type: byte 8+8+9 = 25
     be32_plte = " + ".join(  # PLTE chunk length (chunk starts at 33)
-        f"{pair(str(33 + k))} * {256 ** (3 - k)}" for k in range(4)
+        f"{hex_u8(str(33 + k))} * {256 ** (3 - k)}" for k in range(4)
     )
-    f_byte = pair("doff + (k // rb) * (rb + 1)")
-    x_byte = pair("doff + (k // rb) * (rb + 1) + 1 + (k % rb)")
+    f_byte = hex_u8("doff + (k // rb) * (rb + 1)")
+    x_byte = hex_u8("doff + (k // rb) * (rb + 1) + 1 + (k % rb)")
     # generic sample extraction (i = row-major pixel index): byte at
     # (row·rb + col·dep//8), shifted so the MSB-first dep-bit group
     # lands at bit 0 — identity when dep = 8
@@ -486,9 +475,9 @@ def _png_decode_oracle() -> str:
     # palette gather: PLTE body starts at byte 41 (33 + len/tag); the
     # Spark side grey-collapses RGB with an integer channel mean
     # (decode_media: sum(axis=2) // 3) — mirror it per pixel
-    pal_r = pair("41 + 3*(v)")
-    pal_g = pair("41 + 3*(v) + 1")
-    pal_b = pair("41 + 3*(v) + 2")
+    pal_r = hex_u8("41 + 3*(v)")
+    pal_g = hex_u8("41 + 3*(v) + 1")
+    pal_b = hex_u8("41 + 3*(v) + 2")
     pal_px = f"(({pal_r} + {pal_g} + {pal_b}) // 3)"
     return f"""
     WITH RECURSIVE b AS (
@@ -609,22 +598,16 @@ def _gif_decode_oracle() -> str:
     bytes."""
     from ..sources.binary import GIF_FIXTURE_DIR
 
-    def pair(off: str) -> str:  # u8 at 0-based offset
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
     boff = "(((k // m) * (m + 1) + (k % m) + 1) * cw)"
     b0 = f"(doff + ({boff}) // 8)"
     b1 = f"(doff + ({boff}) // 8 + 1)"
     code = (
-        f"((({pair(b0)}) + 256 * ({pair(b1)})) >> (({boff}) % 8))"
+        f"((({hex_u8(b0)}) + 256 * ({hex_u8(b1)})) >> (({boff}) % 8))"
         f" & ((1 << cw) - 1)"
     )
-    pal_r = pair("13 + 3*(v)")
-    pal_g = pair("13 + 3*(v) + 1")
-    pal_b = pair("13 + 3*(v) + 2")
+    pal_r = hex_u8("13 + 3*(v)")
+    pal_g = hex_u8("13 + 3*(v) + 1")
+    pal_b = hex_u8("13 + 3*(v) + 2")
     return f"""
     WITH b AS (
         SELECT CAST(regexp_extract(filename, '(\\d+)\\.gif$', 1) AS BIGINT)
@@ -636,13 +619,13 @@ def _gif_decode_oracle() -> str:
     ),
     hdr AS (
         SELECT media_id, n_bytes, content_md5, hx,
-               ({pair("6")}) + 256 * ({pair("7")}) AS w,
-               ({pair("8")}) + 256 * ({pair("9")}) AS h,
-               (1 << ((({pair("10")}) & 7) + 1)) AS g
+               ({hex_u8("6")}) + 256 * ({hex_u8("7")}) AS w,
+               ({hex_u8("8")}) + 256 * ({hex_u8("9")}) AS h,
+               (1 << ((({hex_u8("10")}) & 7) + 1)) AS g
         FROM b
     ),
     hdr2 AS (
-        SELECT *, 25 + 3 * g AS doff, ({pair("23 + 3*g")}) AS mcs
+        SELECT *, 25 + 3 * g AS doff, ({hex_u8("23 + 3*g")}) AS mcs
         FROM hdr
     ),
     hdr3 AS (
@@ -722,22 +705,16 @@ def _gif_frames_oracle() -> str:
     read path (GCE delay included) against the same bytes."""
     from ..sources.binary import GIF_ANIM_FIXTURE_DIR
 
-    def pair(off: str) -> str:  # u8 at 0-based offset
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
     boff = "(((k // m) * (m + 1) + (k % m) + 1) * cw)"
     b0 = f"(doff + ({boff}) // 8)"
     b1 = f"(doff + ({boff}) // 8 + 1)"
     code = (
-        f"((({pair(b0)}) + 256 * ({pair(b1)})) >> (({boff}) % 8))"
+        f"((({hex_u8(b0)}) + 256 * ({hex_u8(b1)})) >> (({boff}) % 8))"
         f" & ((1 << cw) - 1)"
     )
-    pal_r = pair("13 + 3*(v)")
-    pal_g = pair("13 + 3*(v) + 1")
-    pal_b = pair("13 + 3*(v) + 2")
+    pal_r = hex_u8("13 + 3*(v)")
+    pal_g = hex_u8("13 + 3*(v) + 1")
+    pal_b = hex_u8("13 + 3*(v) + 2")
     return f"""
     WITH b AS (
         SELECT CAST(regexp_extract(filename, '(\\d+)\\.gif$', 1) AS BIGINT)
@@ -748,13 +725,13 @@ def _gif_frames_oracle() -> str:
     ),
     hdr AS (
         SELECT media_id, n_bytes, hx,
-               ({pair("6")}) + 256 * ({pair("7")}) AS w,
-               ({pair("8")}) + 256 * ({pair("9")}) AS h,
-               (1 << ((({pair("10")}) & 7) + 1)) AS g
+               ({hex_u8("6")}) + 256 * ({hex_u8("7")}) AS w,
+               ({hex_u8("8")}) + 256 * ({hex_u8("9")}) AS h,
+               (1 << ((({hex_u8("10")}) & 7) + 1)) AS g
         FROM b
     ),
     hdr2 AS (
-        SELECT *, ({pair("13 + 3*g + 18")}) AS mcs FROM hdr
+        SELECT *, ({hex_u8("13 + 3*g + 18")}) AS mcs FROM hdr
     ),
     hdr3 AS (
         SELECT *, mcs + 1 AS cw,
@@ -778,7 +755,7 @@ def _gif_frames_oracle() -> str:
     ),
     pf2 AS (
         SELECT *, f0 + 20 AS doff,
-               (({pair("f0 + 4")}) + 256 * ({pair("f0 + 5")})) * 10
+               (({hex_u8("f0 + 4")}) + 256 * ({hex_u8("f0 + 5")})) * 10
                    AS delay_ms
         FROM pf
     ),
@@ -853,13 +830,7 @@ def _webp_decode_oracle() -> str:
     re-walk of the prefix-coded read path against the same bytes."""
     from ..sources.binary import WEBP_FIXTURE_DIR
 
-    def pair(off: str) -> str:  # u8 at 0-based offset
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
-    win = f"((({pair('56 + k')}) + 256 * ({pair('57 + k')})) >> 5) & 255"
+    win = f"((({hex_u8('56 + k')}) + 256 * ({hex_u8('57 + k')})) >> 5) & 255"
     rev = " + ".join(f"(((v >> {j}) & 1) << {7 - j})" for j in range(8))
     return f"""
     WITH b AS (
@@ -875,9 +846,9 @@ def _webp_decode_oracle() -> str:
     ),
     hdr AS (
         SELECT media_id, n_bytes, content_md5, hx,
-               1 + ({pair("21")}) + 256 * (({pair("22")}) % 64) AS w,
-               1 + (({pair("22")}) // 64) + 4 * ({pair("23")})
-                 + 1024 * (({pair("24")}) % 16) AS h
+               1 + ({hex_u8("21")}) + 256 * (({hex_u8("22")}) % 64) AS w,
+               1 + (({hex_u8("22")}) // 64) + 4 * ({hex_u8("23")})
+                 + 1024 * (({hex_u8("24")}) % 16) AS h
         FROM b
     ),
     samp AS (
@@ -941,13 +912,7 @@ def _video_decode_oracle() -> str:
     marker + w*h luma bytes — so frame offsets are pure arithmetic."""
     from ..sources.binary import VIDEO_FIXTURE_DIR
 
-    def pair(off: str) -> str:
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
-    px = pair("hl + frame_idx * (6 + w * h) + 6 + i")
+    px = hex_u8("hl + frame_idx * (6 + w * h) + 6 + i")
     return f"""
     WITH b AS (
         SELECT CAST(regexp_extract(filename, '(\\d+)\\.y4m$', 1) AS BIGINT)
@@ -1018,15 +983,9 @@ def _image_embed_oracle() -> str:
     from ..operators.similarity import duck_cosine_sql
     from ..sources.binary import IMAGE_FIXTURE_DIR
 
-    def pair(off: str) -> str:
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
     # cell c (0..15): rows (c//4)*4..+3, cols (c%4)*4..+3; pixel (r,q)
     # sits at byte px + r*w + q  (px = first pixel byte, 0-based)
-    cell_px = pair("px + ((c // 4) * 4 + (i // 4)) * w + (c % 4) * 4 + (i % 4)")
+    cell_px = hex_u8("px + ((c // 4) * 4 + (i // 4)) * w + (c % 4) * 4 + (i % 4)")
     cos = duck_cosine_sql("a.emb", "b.emb", 16)
     return f"""
     WITH b0 AS (
@@ -1082,28 +1041,21 @@ def q_image_similarity(spark, sf_dir):
     the LSH/IVF candidates path (q_ann_lsh / q_ann_ivf) — identical
     relation shapes.
     """
+    import numpy as np
+
+    from ..operators.boundary import map_rows
     from ..operators.imagecodec import crop_pad
     from ..operators.multimodal import decode_media, media_from_image_files
     from ..operators.similarity import brute_force_topk
 
-    import numpy as _np
-    import pandas as _pd
-    from typing import Iterator as _Iterator
+    def _embed(r):
+        mat = decode_media(bytes(r.content), 0, 0, decode_stub=False)
+        crop = crop_pad(mat, 0, 0, 16, 16).astype(np.float64)
+        pooled = crop.reshape(4, 4, 4, 4).mean(axis=(1, 3))
+        yield (r.media_id, [float(v) for v in pooled.ravel()])
 
-    def _embed(batches: "_Iterator[_pd.DataFrame]") -> "_Iterator[_pd.DataFrame]":
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mat = decode_media(bytes(r.content), 0, 0, decode_stub=False)
-                crop = crop_pad(mat, 0, 0, 16, 16).astype(_np.float64)
-                pooled = crop.reshape(4, 4, 4, 4).mean(axis=(1, 3))
-                rows.append((r.media_id, [float(v) for v in pooled.ravel()]))
-            yield _pd.DataFrame(rows, columns=["media_id", "emb"])
-
-    media = media_from_image_files(spark)
-    emb = media.select("media_id", "content").mapInPandas(
-        _embed, schema="media_id long, emb array<double>"
-    )
+    media = media_from_image_files(spark).select("media_id", "content")
+    emb = map_rows(media, "media_id long, emb array<double>", _embed)
     q = emb.select(F.col("media_id").alias("qid"), F.col("emb").alias("qe"))
     return brute_force_topk(
         emb, q, k=3, corpus_id="media_id", vec_col="emb", query_vec_col="qe"
@@ -1194,27 +1146,18 @@ def q_image_resize(spark, sf_dir):
     Scale shape: identical to q_image_decode — binaryFile splits per
     file, the decode+resample is embarrassingly parallel with
     per-partition codec amortization."""
-    from typing import Iterator
-
-    import pandas as pd
-
+    from ..operators.boundary import map_rows
     from ..operators.imagecodec import decode_pgm, resize_bilinear
     from ..operators.multimodal import media_from_image_files
 
-    def _resample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples(index=False):
-                out = resize_bilinear(decode_pgm(bytes(rec.content)), 16, 16)
-                for r in range(8):
-                    for c in range(8):
-                        rows.append((rec.media_id, r, c, float(out[r, c])))
-            yield pd.DataFrame(rows, columns=["media_id", "r", "c", "val"])
+    def _resample(rec):
+        out = resize_bilinear(decode_pgm(bytes(rec.content)), 16, 16)
+        for r in range(8):
+            for c in range(8):
+                yield (rec.media_id, r, c, float(out[r, c]))
 
     media = media_from_image_files(spark).select("media_id", "content")
-    res = media.mapInPandas(
-        _resample, schema="media_id long, r long, c long, val double"
-    )
+    res = map_rows(media, "media_id long, r long, c long, val double", _resample)
     return res.select("media_id", "r", "c", F.round("val", 6).alias("val"))
 
 
@@ -1230,14 +1173,8 @@ def _video_motion_oracle() -> str:
     exact integers."""
     from ..sources.binary import VIDEO_FIXTURE_DIR
 
-    def pair(off: str) -> str:
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
-    cur = pair("hl + frame_idx * (6 + w * h) + 6 + i")
-    prv = pair("hl + (frame_idx - 1) * (6 + w * h) + 6 + i")
+    cur = hex_u8("hl + frame_idx * (6 + w * h) + 6 + i")
+    prv = hex_u8("hl + (frame_idx - 1) * (6 + w * h) + 6 + i")
     return f"""
     WITH b AS (
         SELECT CAST(regexp_extract(filename, '(\\d+)\\.y4m$', 1) AS BIGINT)
@@ -1333,17 +1270,11 @@ def _media_catalog_oracle() -> str:
     asserts exactly one byte-aligned occurrence)."""
     from ..sources.binary import CATALOG_FIXTURE_DIR
 
-    def pair(off: str) -> str:  # u8 at 0-based byte offset
-        return (
-            f"((strpos('0123456789abcdef', substr(hx, 2*({off}) + 1, 1)) - 1) * 16"
-            f" + (strpos('0123456789abcdef', substr(hx, 2*({off}) + 2, 1)) - 1))"
-        )
-
     # byte offset of the ispe fourcc (0-based): strpos is 1-based hex
     ispe = "((strpos(hx, '69737065') - 1) // 2)"
     be32 = lambda k: (
-        f"({pair(f'{k}')} * 16777216 + {pair(f'({k}) + 1')} * 65536"
-        f" + {pair(f'({k}) + 2')} * 256 + {pair(f'({k}) + 3')})"
+        f"({hex_u8(f'{k}')} * 16777216 + {hex_u8(f'({k}) + 1')} * 65536"
+        f" + {hex_u8(f'({k}) + 2')} * 256 + {hex_u8(f'({k}) + 3')})"
     )
     sub_cc = (  # codec fourcc of a VP8X file: first ANMF subchunk when
         # animated (byte 68 in the fixture profile), else the chunk
@@ -1374,13 +1305,13 @@ def _media_catalog_oracle() -> str:
     fl AS (
         SELECT *,
                CASE WHEN is_webp AND cc12 = '56503858'
-                    THEN (({pair('20')}) // 2) % 2 = 1
+                    THEN (({hex_u8('20')}) // 2) % 2 = 1
                     WHEN is_bmff THEN brand = '61766973'
                     ELSE FALSE END AS anim,
                CASE WHEN is_webp AND cc12 = '5650384c'
-                    THEN (({pair('24')}) // 16) % 2 = 1
+                    THEN (({hex_u8('24')}) // 16) % 2 = 1
                     WHEN is_webp AND cc12 = '56503858'
-                    THEN (({pair('20')}) // 16) % 2 = 1
+                    THEN (({hex_u8('20')}) // 16) % 2 = 1
                     WHEN is_bmff THEN strpos(hx, '61757843') > 0
                     ELSE FALSE END AS has_alpha
         FROM cls
@@ -1395,21 +1326,21 @@ def _media_catalog_oracle() -> str:
                              WHEN '56503820' THEN 'vp8' END
                     WHEN is_bmff THEN 'av01' END AS codec,
                CASE WHEN is_webp AND cc12 = '5650384c'
-                    THEN 1 + ({pair('21')}) + 256 * (({pair('22')}) % 64)
+                    THEN 1 + ({hex_u8('21')}) + 256 * (({hex_u8('22')}) % 64)
                     WHEN is_webp AND cc12 = '56503820'
-                    THEN ({pair('26')}) + 256 * (({pair('27')}) % 64)
+                    THEN ({hex_u8('26')}) + 256 * (({hex_u8('27')}) % 64)
                     WHEN is_webp AND cc12 = '56503858'
-                    THEN 1 + ({pair('24')}) + 256 * ({pair('25')})
-                         + 65536 * ({pair('26')})
+                    THEN 1 + ({hex_u8('24')}) + 256 * ({hex_u8('25')})
+                         + 65536 * ({hex_u8('26')})
                     WHEN is_bmff THEN {be32(f"{ispe} + 8")} END AS width,
                CASE WHEN is_webp AND cc12 = '5650384c'
-                    THEN 1 + (({pair('22')}) // 64) + 4 * ({pair('23')})
-                         + 1024 * (({pair('24')}) % 16)
+                    THEN 1 + (({hex_u8('22')}) // 64) + 4 * ({hex_u8('23')})
+                         + 1024 * (({hex_u8('24')}) % 16)
                     WHEN is_webp AND cc12 = '56503820'
-                    THEN ({pair('28')}) + 256 * (({pair('29')}) % 64)
+                    THEN ({hex_u8('28')}) + 256 * (({hex_u8('29')}) % 64)
                     WHEN is_webp AND cc12 = '56503858'
-                    THEN 1 + ({pair('27')}) + 256 * ({pair('28')})
-                         + 65536 * ({pair('29')})
+                    THEN 1 + ({hex_u8('27')}) + 256 * ({hex_u8('28')})
+                         + 65536 * ({hex_u8('29')})
                     WHEN is_bmff THEN {be32(f"{ispe} + 12")} END AS height
         FROM fl
     )
@@ -1460,18 +1391,11 @@ def q_media_catalog(spark, sf_dir):
     SOF/IDAT). The original binaryFile path (read_binary_files →
     parse_media_header) remains available for small corpora where a
     content scan is already materialized."""
-    from ..operators.mediacatalog import catalog_from_listing
+    from ..operators.mediacatalog import catalog_from_listing, catalog_rows
     from ..sources.binary import ensure_catalog_fixture, list_files
 
-    cat = catalog_from_listing(list_files(spark, ensure_catalog_fixture()))
-    media_id = F.element_at(
-        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-    ).cast("long")
-    return cat.select(
-        media_id.alias("media_id"),
-        F.col("file_size").alias("n_bytes"),
-        "format", "codec", "width", "height",
-        "has_alpha", "is_animated", "decodable",
+    return catalog_rows(
+        catalog_from_listing(list_files(spark, ensure_catalog_fixture()))
     )
 
 

@@ -25,7 +25,8 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Inside the repo (the driver and local tests share this path — derived
 # from the package location so any checkout works); regenerated on
@@ -96,6 +97,15 @@ def list_files(spark: SparkSession, path: str, glob: str = "*") -> DataFrame:
     return spark.createDataFrame(
         rows, "path string, file_size long"
     ).repartition(n_parts)
+
+
+def media_id_from_path() -> Column:
+    """The media_id of a scanned or listed file: the numeric stem of
+    the `path` column's file name ('…/17.png' → 17), NULL when the
+    stem is not a number."""
+    return F.element_at(
+        F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
+    ).cast("long")
 
 
 IMAGE_FIXTURE_DIR = os.path.join(_REPO_ROOT, ".image_fixture")

@@ -26,7 +26,6 @@ tests/test_streaming.py proves streamed ≡ batch row-for-row — the
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..sources.catalog import VersionedTable
 
@@ -43,22 +42,15 @@ def make_media_catalog_fn(
     has_alpha, is_animated, decodable) — the exact q_media_catalog
     row shape, so the maintained table IS the query's result for the
     files seen so far."""
-    from ..operators.mediacatalog import catalog_from_listing
+    from ..operators.mediacatalog import catalog_from_listing, catalog_rows
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= catalog.last_txn(app_id):
             return  # redelivery: already committed
-        cat = catalog_from_listing(
-            batch_df.select("path", "file_size"), head_bytes=head_bytes
-        )
-        media_id = F.element_at(
-            F.split(F.element_at(F.split(F.col("path"), "/"), -1), "\\."), 1
-        ).cast("long")
-        rows = cat.select(
-            media_id.alias("media_id"),
-            F.col("file_size").alias("n_bytes"),
-            "format", "codec", "width", "height",
-            "has_alpha", "is_animated", "decodable",
+        rows = catalog_rows(
+            catalog_from_listing(
+                batch_df.select("path", "file_size"), head_bytes=head_bytes
+            )
         )
         catalog.write(rows, mode="append", txn=(app_id, int(batch_id)))
         if expire_keep is not None:

@@ -4,9 +4,9 @@ streaming form): `streaming_track` uses `applyInPandasWithState`;
 API (`transformWithStateInPandas`), gated behind an import check
 because its Python side requires `protobuf` (absent in this container).
 
-The batch tracker's per-frame step (tracker/batch.py SequenceTracker) is
-reused verbatim; this module only adds state (de)serialization so the
-tracker survives across micro-batches. State = (next_id, per-track
+The batch tracker's frame loop (tracker/batch.py track_frames, over
+SequenceTracker.step) is reused verbatim; this module only adds state
+(de)serialization so the tracker survives across micro-batches. State = (next_id, per-track
 flattened Kalman state) as plain Spark rows — no pickling, so state is
 portable across executors and restarts.
 
@@ -19,20 +19,22 @@ the replay path, matching the reference's batch-only semantics.
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..tracker.batch import TrackerConfig, SequenceTracker, _Track, frame_order
+from ..tracker.batch import (
+    TRACKS_OUT_SCHEMA,
+    SequenceTracker,
+    TrackerConfig,
+    _Track,
+    track_frames,
+)
 from ..tracker.kalman import KalmanBoxTracker, STATE_DIM
 
-OUTPUT_SCHEMA = (
-    "sequence string, frame string, track_id int, det_id int, "
-    "bb_left double, bb_top double, bb_width double, bb_height double, conf double"
-)
 # next_id + per-track: (track_id, time_since_update, hits, x[6], P[36])
 STATE_SCHEMA = (
     "next_id int, track_ids array<int>, tsu array<int>, hits array<int>, "
@@ -85,38 +87,18 @@ def streaming_track(
     def _update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        seq = key[0]
         tracker = (
             _tracker_from_state(state.get, cfg)
             if state.exists
             else SequenceTracker(cfg)
         )
-        rows: list[tuple[Any, ...]] = []
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        # Numeric-aware frame ordering — lexicographic would process
-        # unpadded '10' before '2' (see tracker.batch.frame_order).
-        for frame in frame_order(pdf["frame"]):
-            fd = pdf[pdf["frame"] == frame].sort_values("obj_id")
-            dets = fd[["bb_left", "bb_top", "bb_width", "bb_height"]].to_numpy(float)
-            rows.extend(
-                tracker.step(
-                    frame, dets, fd["obj_id"].to_numpy(), fd["conf"].to_numpy(float)
-                )
-            )
+        out = track_frames(tracker, key[0], pd.concat(list(pdfs), ignore_index=True))
         state.update(_tracker_to_state(tracker))
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "frame", "track_id", "det_id",
-                "bb_left", "bb_top", "bb_width", "bb_height", "conf",
-            ],
-        )
-        out.insert(0, "sequence", seq)
         yield out
 
     return detections.groupBy("sequence").applyInPandasWithState(
         _update,
-        outputStructType=OUTPUT_SCHEMA,
+        outputStructType=TRACKS_OUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
@@ -151,36 +133,15 @@ def streaming_track_tws(
             self._state = handle.getValueState("tracker", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timerValues):
-            seq = key[0]
             tracker = (
                 _tracker_from_state(tuple(self._state.get()), cfg)
                 if self._state.exists()
                 else SequenceTracker(cfg)
             )
-            out_rows: list[tuple[Any, ...]] = []
-            pdf = pd.concat(list(rows), ignore_index=True)
-            for frame in frame_order(pdf["frame"]):
-                fd = pdf[pdf["frame"] == frame].sort_values("obj_id")
-                dets = fd[
-                    ["bb_left", "bb_top", "bb_width", "bb_height"]
-                ].to_numpy(float)
-                out_rows.extend(
-                    tracker.step(
-                        frame,
-                        dets,
-                        fd["obj_id"].to_numpy(),
-                        fd["conf"].to_numpy(float),
-                    )
-                )
-            self._state.update(_tracker_to_state(tracker))
-            out = pd.DataFrame(
-                out_rows,
-                columns=[
-                    "frame", "track_id", "det_id",
-                    "bb_left", "bb_top", "bb_width", "bb_height", "conf",
-                ],
+            out = track_frames(
+                tracker, key[0], pd.concat(list(rows), ignore_index=True)
             )
-            out.insert(0, "sequence", seq)
+            self._state.update(_tracker_to_state(tracker))
             yield out
 
         def close(self) -> None:
@@ -188,7 +149,7 @@ def streaming_track_tws(
 
     return detections.groupBy("sequence").transformWithStateInPandas(
         statefulProcessor=_TrackerProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
+        outputStructType=TRACKS_OUT_SCHEMA,
         outputMode="append",
         timeMode="None",
     )

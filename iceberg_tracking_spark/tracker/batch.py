@@ -7,7 +7,7 @@ create → emit. Sequences are independent, so the distributed form is
 `detections.groupBy("sequence").applyInPandas(track_one_sequence)`:
 parallel across sequences, faithful sequential semantics within one.
 The streaming form (transformWithStateInPandas) lives in
-streaming/tracker.py and shares this per-frame step.
+streaming/tracker.py and shares this frame loop (`track_frames`).
 
 Determinism: frames processed in sorted order; candidate pairs scored
 and greedily matched in (score desc, track_id asc, det_id asc) order —
@@ -23,7 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .kalman import F_MAT, H_MAT, KalmanBoxTracker
+from .kalman import F_MAT, H_MAT, Q_MAT, R_MAT, KalmanBoxTracker
 
 # Transposes used by the stacked (per-frame batched) Kalman math in
 # `SequenceTracker.step`. Stacked `X @ F_MAT.T` / `np.matmul(F_MAT, P)`
@@ -97,16 +97,12 @@ class SequenceTracker:
         """
         cfg = self.cfg
         n_t, n_d = len(self.tracks), len(dets)
-        # 1. predict all tracks — stacked F@x / F@P@F'+Q. Q is a
-        #    per-filter attribute but every filter this tracker ever
-        #    holds is constructed with default noise (this class and
-        #    streaming._tracker_from_state), so the first track's Q
-        #    stands for all.
+        # 1. predict all tracks — stacked F@x / F@P@F'+Q
         if n_t:
             X = np.stack([tr.kf.x for tr in self.tracks])
             P = np.stack([tr.kf.P for tr in self.tracks])
             X = X @ _F_T
-            P = np.matmul(np.matmul(F_MAT, P), _F_T) + self.tracks[0].kf.Q
+            P = np.matmul(np.matmul(F_MAT, P), _F_T) + Q_MAT
         # 2. candidate pairs: dense tracks×dets score matrix + the
         #    radius/size/score gates (same gate expressions, same
         #    IEEE evaluation order per element as the scalar loop)
@@ -165,7 +161,7 @@ class SequenceTracker:
             )
             Xm, Pm = X[mi], P[mi]
             Y = Z - Xm @ _H_T
-            S = np.matmul(np.matmul(H_MAT, Pm), _H_T) + self.tracks[0].kf.R
+            S = np.matmul(np.matmul(H_MAT, Pm), _H_T) + R_MAT
             K = np.matmul(np.matmul(Pm, _H_T), np.linalg.inv(S))
             X[mi] = Xm + np.matmul(K, Y[..., None])[..., 0]
             P[mi] = np.matmul(np.eye(6) - np.matmul(K, H_MAT), Pm)
@@ -230,8 +226,10 @@ def frame_order(frames) -> list:
     return sorted(set(frames), key=k)
 
 
-def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFrame:
-    """Run the sequential tracker over one sequence's detections.
+def track_frames(tracker: SequenceTracker, seq, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Feed detections of sequence `seq` to `tracker` in frame_order
+    and return the emitted rows, columns as in TRACKS_OUT_SCHEMA. The
+    one per-frame loop of the batch and both streaming trackers.
 
     Columns are extracted to numpy ONCE and frames sliced by
     positional index (r13): the former per-frame boolean mask
@@ -243,8 +241,6 @@ def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFram
     `sort_values("obj_id")` applies, so the per-frame det arrays are
     element-identical to the old path (parity-tested).
     """
-    seq = pdf["sequence"].iloc[0]
-    tracker = SequenceTracker(cfg)
     out_rows = []
     idx_by_frame = pdf.groupby("frame", sort=False).indices
     obj_all = pdf["obj_id"].to_numpy()
@@ -253,8 +249,9 @@ def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFram
     for frame in frame_order(pdf["frame"]):
         idx = idx_by_frame[frame]
         sel = idx[np.argsort(obj_all[idx], kind="quicksort")]
-        emitted = tracker.step(frame, box_all[sel], obj_all[sel], conf_all[sel])
-        out_rows.extend(emitted)
+        out_rows.extend(
+            tracker.step(frame, box_all[sel], obj_all[sel], conf_all[sel])
+        )
     out = pd.DataFrame(
         out_rows,
         columns=[
@@ -263,6 +260,12 @@ def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFram
         ],
     )
     out.insert(0, "sequence", seq)
+    return out
+
+
+def track_one_sequence_pdf(pdf: pd.DataFrame, cfg: TrackerConfig) -> pd.DataFrame:
+    """Run the sequential tracker over one sequence's detections."""
+    out = track_frames(SequenceTracker(cfg), pdf["sequence"].iloc[0], pdf)
     # post-filter: drop tracks shorter than min_track_length
     # (reference tracking.py:1152-1174)
     if len(out) and cfg.min_track_length > 1:

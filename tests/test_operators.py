@@ -126,6 +126,32 @@ def test_inference_scaffold(spark):
     assert (out["bb_width"] > 0).all()
 
 
+def test_map_rows_contract(spark):
+    """map_rows: an empty input partition and a row that yields nothing
+    contribute no rows; a row's tuples keep their order; an all-empty
+    result still carries the schema's columns and types."""
+    from pyspark.sql.types import DataType
+
+    from iceberg_tracking_spark.operators.boundary import map_rows
+
+    schema = "k long, j int, tag string"
+
+    def fan(r):
+        for j in range(r.n):
+            yield (r.k, j, f"{r.k}:{j}")
+
+    # 3 rows over 4 slices: at least one input partition is empty
+    rows = spark.sparkContext.parallelize([(1, 0), (2, 3), (3, 1)], 4)
+    df = spark.createDataFrame(rows, "k long, n int")
+    assert min(df.rdd.glom().map(len).collect()) == 0
+    got = [tuple(r) for r in map_rows(df, schema, fan).collect()]
+    assert got == [(2, 0, "2:0"), (2, 1, "2:1"), (2, 2, "2:2"), (3, 0, "3:0")]
+
+    empty = map_rows(df.where("n = 0"), schema, fan)
+    assert empty.collect() == []
+    assert empty.schema == DataType.fromDDL(schema)
+
+
 def test_mot_csv_roundtrip(spark, tmp_path):
     src = spark.createDataFrame(
         [
