@@ -9,8 +9,14 @@ the ones that matter at cluster scale too:
   tracking.py:456), so AQE skew handling is load-bearing at 100 TB.
 * ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster AQE coalescing makes the initial number far less critical.
-* Arrow enabled — every pandas-interop path (applyInPandas tracker/NMS,
-  mapInPandas inference scaffolds, toPandas in tests) is Arrow-batched.
+* Arrow enabled — every Python-interop path (the tracker's
+  applyInPandas, `boundary.filter_groups`' mapInArrow for NMS /
+  nested-box removal / greedy matching, `boundary.map_rows`' and the
+  inference mapInPandas, toPandas in tests) is Arrow-batched.
+* The package's parent directory rides on
+  ``spark.executorEnv.PYTHONPATH``: Python workers unpickle UDFs that
+  refer to this package's functions by module, so they must import it
+  whatever the driver's working directory.
 * Session timezone pinned to UTC so timestamp semantics agree with the
   DuckDB oracle (DuckDB timestamps are UTC-naive).
 """
@@ -20,6 +26,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -50,7 +59,11 @@ def get_spark(
         # has no nanos timestamp — read as long, converted in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf[_PYTHONPATH_KEY] = os.pathsep.join(
+        p for p in (conf.get(_PYTHONPATH_KEY), _PACKAGE_PARENT) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -10,9 +10,9 @@ The streaming form (transformWithStateInPandas) lives in
 streaming/tracker.py and shares this frame loop (`track_frames`).
 
 Determinism: frames processed in sorted order; candidate pairs scored
-and greedily matched in (score desc, track_id asc, det_id asc) order —
-a pinned total order replacing the reference's stable-sort ties
-(SURVEY §7.4 note 1).
+and greedily matched in (score desc, track_id asc, det_id asc,
+detection index asc) order — a pinned total order replacing the
+reference's stable-sort ties (SURVEY §7.4 note 1).
 """
 
 from __future__ import annotations
@@ -133,10 +133,13 @@ class SequenceTracker:
             )
             ti, dj = np.nonzero(ok)
             pairs = list(zip(score[ti, dj].tolist(), ti.tolist(), dj.tolist()))
-        # 3. greedy 1:1 assignment, pinned total order (the key is a
-        #    total order — track_id unique per i, det_id unique per j —
-        #    so the pre-sort pair order is immaterial)
-        pairs.sort(key=lambda p: (-p[0], self.tracks[p[1]].track_id, det_ids[p[2]]))
+        # 3. greedy 1:1 assignment, pinned total order: track_id is
+        #    unique per i, but det_id is not unique per j (a frame may
+        #    repeat an obj_id), so the detection index j closes the key
+        #    and the pre-sort pair order is immaterial
+        pairs.sort(
+            key=lambda p: (-p[0], self.tracks[p[1]].track_id, det_ids[p[2]], p[2])
+        )
         used_t: set[int] = set()
         used_d: set[int] = set()
         matches: list[tuple[int, int]] = []

@@ -152,6 +152,59 @@ def test_map_rows_contract(spark):
     assert empty.schema == DataType.fromDDL(schema)
 
 
+def test_filter_groups_contract(spark):
+    """filter_groups: empty input partitions and groups whose `keep`
+    returns nothing contribute no rows; kept rows are the input rows
+    with every column type and value (nulls, NaN, timestamps, arrays)
+    unchanged; an all-empty result still carries the input schema."""
+    import datetime
+
+    import numpy as np
+
+    from iceberg_tracking_spark.operators.boundary import filter_groups
+
+    ddl = "k string, i long, x double, ts timestamp, a array<int>, s string"
+    ts = datetime.datetime(2024, 5, 1, 12, 30)
+    rows = [
+        ("g1", 1, 0.5, ts, [1, 2], "p"),
+        ("g1", 2, float("nan"), None, None, None),
+        ("g2", 3, None, ts, [], "q"),
+        (None, 4, 1.5, ts, [3], "r"),
+        (None, 5, 2.5, None, [4, None], "s"),
+    ]
+    # 5 rows over 8 slices: at least one input partition is empty
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), ddl)
+    assert min(df.rdd.glom().map(len).collect()) == 0
+
+    def key(r):
+        return tuple("nan" if v != v else v for v in r)
+
+    everything = filter_groups(df, ["k"], lambda g: np.arange(len(g)))
+    assert everything.schema == df.schema
+    assert sorted(map(key, everything.collect()), key=repr) == sorted(
+        map(key, df.collect()), key=repr
+    )
+
+    # the null key is one group of two rows; g2 keeps nothing
+    def first_of_big(g):
+        return [int(np.argmin(g["i"]))] if len(g) > 1 else []
+
+    got = filter_groups(df, ["k"], first_of_big).collect()
+    assert sorted(r["i"] for r in got) == [1, 4]
+
+    none = filter_groups(df, ["k"], lambda g: [])
+    assert none.collect() == []
+    assert none.schema == df.schema
+
+    # a float key: NaN equals NaN and null equals null, as in groupBy
+    fk = spark.createDataFrame(
+        [(float("nan"), 1), (float("nan"), 2), (None, 3), (None, 4), (1.0, 5)],
+        "x double, i long",
+    )
+    got = filter_groups(fk, ["x"], first_of_big).collect()
+    assert sorted(r["i"] for r in got) == [1, 3]
+
+
 def test_mot_csv_roundtrip(spark, tmp_path):
     src = spark.createDataFrame(
         [

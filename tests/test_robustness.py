@@ -598,3 +598,36 @@ def test_int8_quantize_zero_vector_guard(spark, tmp_path):
         o = orc[vid]
         assert (r["scale_r"], r["code_sum"], r["code_min"], r["code_max"],
                 r["n_sat"]) == (o[1], o[2], o[3], o[4], o[5]), vid
+
+
+def test_python_udf_runs_from_any_working_directory(tmp_path):
+    """A driver started outside the repo (package on its own sys.path
+    only) still runs Python-worker operators: get_spark ships the
+    package's parent directory to the workers' PYTHONPATH."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from iceberg_tracking_spark.operators.nms import nms
+from iceberg_tracking_spark.session import get_spark
+spark = get_spark(app_name="cwd-check", master="local[1]", shuffle_partitions=1)
+det = spark.createDataFrame(
+    [("s", "1", 1, 0.0, 0.0, 10.0, 10.0, 0.9),
+     ("s", "1", 2, 1.0, 0.0, 10.0, 10.0, 0.8),
+     ("s", "1", 3, 50.0, 0.0, 10.0, 10.0, 0.7)],
+    {DET_DDL!r},
+)
+print("KEPT", sorted(r["obj_id"] for r in nms(det).collect()))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "KEPT [1, 3]" in done.stdout, done.stderr[-3000:]

@@ -315,3 +315,17 @@ def test_parity_streaming_state_roundtrip():
         ref_state = _tracker_from_state(sb, cfg)
         ref = _ReferenceTracker(cfg)
         ref.next_id, ref.tracks = ref_state.next_id, ref_state.tracks
+
+
+@pytest.mark.parametrize("confs", [(0.8, 0.6), (0.6, 0.8)])
+def test_greedy_tie_on_shared_obj_id_takes_lower_detection_index(confs):
+    """Two detections of one frame share obj_id and box, so both score
+    the same against the only track: (score, track_id, det_id) ties and
+    the detection index decides — the track takes detection 0 and
+    detection 1 opens a new track, whichever conf each carries."""
+    tracker = SequenceTracker(TrackerConfig())
+    tracker.step("000000", np.array([[100.0, 100.0, 40.0, 40.0]]), np.array([1]),
+                 np.array([0.9]))
+    dets = np.array([[102.0, 100.0, 40.0, 40.0], [102.0, 100.0, 40.0, 40.0]])
+    emitted = tracker.step("000001", dets, np.array([7, 7]), np.array(confs))
+    assert [(r[1], r[2], r[7]) for r in emitted] == [(1, 7, confs[0]), (2, 7, confs[1])]
